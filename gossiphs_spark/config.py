@@ -38,18 +38,17 @@ class PipelineConfig:
     half_life_days: float = 365.0         # (graph.rs:971)
 
     # --- engine knobs (ours; no reference analog — Spark-scale tuning) ---
-    # materialize the filtered-mention stage to scratch parquet: cuts the
-    # analyzed-tree depth for the ~25 downstream ops (driver plan-build
-    # ~14 s → ~5 s at sf0.1) and is the pipeline's natural checkpoint
-    # boundary at scale (an Iceberg stage table on a cluster)
-    stage_materialize: bool = True
-    # where stage_materialize writes. Empty = a driver-local tempdir,
-    # which is only correct when spark.master is local (on yarn/k8s the
+    # where build_graph writes its filtered-mention (fm) stage parquet —
+    # the stage cuts the analyzed-tree depth for the ~25 downstream ops
+    # (driver plan-build ~14 s → ~5 s at sf0.1) and is the pipeline's
+    # natural checkpoint boundary at scale (an Iceberg stage table on a
+    # cluster). Empty = a driver-local tempdir, released with the build;
+    # that is only correct when spark.master is local (on yarn/k8s the
     # executors would write parts to THEIR local disks and the driver's
-    # read-back would be silently truncated) — on a non-local master with
-    # no URI configured the pipeline falls back to fm.cache(). On a
-    # cluster set this to a shared scratch location (s3://…, hdfs://…);
-    # its lifecycle (snapshot expiry / TTL) then owns cleanup.
+    # read-back would be silently truncated), so on a non-local master
+    # build_graph raises ValueError unless this is set to a shared scratch
+    # location (s3://…, hdfs://…), whose lifecycle (snapshot expiry / TTL)
+    # then owns cleanup.
     stage_scratch_uri: str = ""
     # n_pages source: False (default) counts distinct urls over the
     # extracted mentions — one stats pass, no second corpus scan — which

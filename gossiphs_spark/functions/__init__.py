@@ -22,29 +22,14 @@ def md5_long(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def ext_lower(url: Column) -> Column:
-    """X1: lowercase last '.'-segment (ref graph.rs:117-123)."""
-    return F.lower(F.element_at(F.split(url, r"\."), -1))
-
-
 def base_name(name: Column) -> Column:
     """X4: last '.'-segment of a qualified name (ref graph.rs:378,394,635)."""
     return F.element_at(F.split(name, r"\."), -1)
 
 
-def norm_path(p: Column) -> Column:
-    """X2: backslash→slash + quote trim (ref graph.rs:52-53, extractor.rs:289)."""
-    return F.regexp_replace(F.translate(p, "\\", "/"), """^["'<]+|["'>]+$""", "")
-
-
 def qualified(parts: Column) -> Column:
     """X3: container path joined with '.' (ref extractor.rs:197-207)."""
     return F.concat_ws(".", parts)
-
-
-def ends_with_dot_name(qualified_col: Column, name_col: Column) -> Column:
-    """X5: suffix test `q.endswith('.' + name)` (ref graph.rs:388)."""
-    return qualified_col.endswith(F.concat(F.lit("."), name_col))
 
 
 def temporal_decay(age_days: Column, half_life_days: float) -> Column:

@@ -40,8 +40,6 @@ MENTIONS_SCHEMA = (
     "start_row long, start_col long, end_row long, end_col long"
 )
 
-EXTRACTED_SCHEMA = "url string, warc_ts timestamp, text string"
-
 _BLOCK_RE = re.compile(
     r"<(nav|footer|script|style)\b[^>]*>.*?</\1>", re.DOTALL | re.IGNORECASE
 )
@@ -883,21 +881,6 @@ def extract_mentions(
             profile_acc.add(dict(counts))
 
     return pages.select("url", "html").mapInPandas(run, schema)
-
-
-def extract_texts(pages: DataFrame) -> DataFrame:
-    """pages → extracted(url, warc_ts, text); the byte-identical text table."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "text": [extract_text(h) for h in pdf["html"]],
-                }
-            )
-
-    return pages.select("url", "warc_ts", "html").mapInPandas(run, EXTRACTED_SCHEMA)
 
 
 def page_symbol_limit(mentions: DataFrame, limit: int = 4096) -> DataFrame:

@@ -32,20 +32,6 @@ def salted_sum(df: DataFrame, key_cols: list[str], value_col: str,
 
 
 # ---------------------------------------------------------------------------
-# A8: accumulate candidate scores into symbol→symbol edge weights
-# (ref symbol.rs:231-241, called graph.rs:783-784), salted because hub
-# entities concentrate on few dst keys.
-# ---------------------------------------------------------------------------
-def accumulate_edges(links: DataFrame, src_col: str = "src_id",
-                     dst_col: str = "dst_id", weight_col: str = "score",
-                     salt_from: str | None = None, buckets: int = 16) -> DataFrame:
-    salt_src = salt_from or src_col
-    return salted_sum(
-        links, [src_col, dst_col], weight_col, salt_src, buckets, out_col="weight"
-    )
-
-
-# ---------------------------------------------------------------------------
 # S5: dense-id node/edge export (ref api.rs:363-447 / main.rs:288-327).
 # Dense ids match the reference's sorted-files enumeration (api.rs:368-375)
 # WITHOUT a global single-partition sort: two-phase rank (range partition →
@@ -112,16 +98,6 @@ def dense_export(related: DataFrame) -> tuple[DataFrame, DataFrame]:
         .select("src", "dst", "score")
     )
     return nodes, edges_out
-
-
-# ---------------------------------------------------------------------------
-# S6: relation matrix (ref main.rs:329-441) — long form; the CSV pivot is a
-# groupBy().pivot() away and only sensible at small scale.
-# ---------------------------------------------------------------------------
-def relation_matrix(related: DataFrame, pivot_values: list[str] | None = None) -> DataFrame:
-    if pivot_values is None:
-        return related.select("page", "other", "score")
-    return related.groupBy("page").pivot("other", pivot_values).sum("score")
 
 
 # ---------------------------------------------------------------------------

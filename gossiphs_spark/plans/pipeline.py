@@ -25,7 +25,13 @@ O(refs × candidates) driver loop into shuffles Spark parallelizes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import atexit
+import os
+import shutil
+import tempfile
+import uuid
+from contextlib import ExitStack
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,6 +43,7 @@ from gossiphs_spark.operators.ranking import attach_cutoffs, filter_related
 from gossiphs_spark.operators.scoring import entropy_zscore_adjust
 from gossiphs_spark.operators.graphops import salted_sum
 from gossiphs_spark.operators.textmode import damp_hubs, hub_stoplist
+from gossiphs_spark.session import Scope, scope
 
 
 @dataclass
@@ -52,23 +59,20 @@ class GraphTables:
     #                         a caller opts into damping (<1.0, the web-
     #                         scale recommendation) the divergence stays
     #                         inspectable per run without forcing a job.
-    scratch_dir: str | None = None  # stage_materialize scratch this build
-    #                         reads from; atexit reclaims it, but a
-    #                         long-lived driver calling build_graph
-    #                         repeatedly should release() each result once
-    #                         done to bound disk (one corpus-scale dir per
-    #                         build otherwise).
     cached: tuple = ()      # the intermediates THIS build cached, so a
     #                         caller can release exactly them (not
     #                         catalog.clearCache(), which evicts every
     #                         other query's warmed caches session-wide)
+    resources: ExitStack = field(default_factory=ExitStack)  # the build's
+    #                         scope, handed off: its caches and its fm
+    #                         stage directory
 
     def release(self) -> None:
-        """Drop this build's scratch stage (the tables become unreadable)."""
-        if self.scratch_dir:
-            import shutil
-
-            shutil.rmtree(self.scratch_dir, ignore_errors=True)
+        """Drop everything this build holds — its fm stage and its caches
+        (the tables become unreadable). A long-lived driver calling
+        build_graph repeatedly should release each result once done, to
+        bound disk (one corpus-scale stage dir per build otherwise)."""
+        self.resources.close()
 
     def release_caches(self) -> None:
         """Unpersist the intermediates this build cached — scoped, so other
@@ -232,6 +236,41 @@ def build_graph(
     evidence: DataFrame,
     cfg: PipelineConfig = PipelineConfig(),
 ) -> GraphTables:
+    """Run the scored pipeline over ``pages``/``evidence``. The returned
+    tables read this build's caches and fm stage; free them with
+    :meth:`GraphTables.release`. If the build fails, everything it
+    acquired is released before the error propagates."""
+    with scope(spark) as s:
+        g = _build(s, pages, evidence, cfg)
+        g.resources = s.pop_all()
+        return g
+
+
+def _stage_uri(s: Scope, cfg: PipelineConfig) -> str:
+    """Where the fm stage is written. A shared ``cfg.stage_scratch_uri``
+    (s3://…, hdfs://…) is seen by every executor and the driver, and its
+    lifecycle (TTL / snapshot expiry) owns cleanup. Without one, a local
+    master writes to a tempdir owned by the build's scope (released with
+    the build, or at process exit). A non-local master cannot use a
+    driver-local tempdir — executors would write parts to THEIR disks and
+    the read-back would be silently truncated — so that is an error."""
+    if cfg.stage_scratch_uri:
+        return cfg.stage_scratch_uri.rstrip("/") + f"/fm_{uuid.uuid4().hex}"
+    if not s.spark.conf.get("spark.master", "").startswith("local"):
+        raise ValueError(
+            "build_graph: spark.master is not local and "
+            "PipelineConfig.stage_scratch_uri is unset; set stage_scratch_uri "
+            "to a shared scratch location for the fm stage"
+        )
+    scratch = tempfile.mkdtemp(prefix="gossiphs_stage_")
+    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    s.callback(shutil.rmtree, scratch, ignore_errors=True)
+    return os.path.join(scratch, "fm")
+
+
+def _build(s: Scope, pages: DataFrame, evidence: DataFrame,
+           cfg: PipelineConfig) -> GraphTables:
+    fm_path = _stage_uri(s, cfg)
     # ---- U1 + hygiene -----------------------------------------------------
     if cfg.exclude_url_regex:
         pages = pages.filter(~F.regexp_like("url", F.lit(cfg.exclude_url_regex)))  # F2
@@ -240,16 +279,7 @@ def build_graph(
     # The extraction UDF feeds every downstream branch (defs/refs/imports/
     # idf/triples) — cache it or Arrow extraction re-executes per branch.
     # The reference extracts exactly once (graph.rs:504-508); so do we.
-    mentions = mentions.cache()
-    # The evidence dedup scan is independent of the mention/stats chain
-    # until the size-limit filter (which needs n_pages), so its cache fill
-    # runs CONCURRENTLY with the stats job below (guide §2.6 — overlap
-    # independent jobs so one job's tail back-fills the other's executors).
-    from concurrent.futures import ThreadPoolExecutor
-
-    ev_base = evidence.select("url", "evidence_id", "ts").distinct().cache()
-    pool = ThreadPoolExecutor(max_workers=1)
-    ev_fill = pool.submit(ev_base.count)
+    mentions = s.cache(mentions)
     # ONE stats pass over the cached mentions feeds every scalar the plan
     # needs: n_pages (was a second full scan of `pages` — at 100 TB that is
     # a second corpus read for one number; pages without mentions are
@@ -267,8 +297,8 @@ def build_graph(
         n_pages = stats["n_pages"]
     bcast_ok = stats["n_names"] <= cfg.broadcast_threshold_rows
     # fm is referenced by ~25 downstream joins/unions — prune to the 4
-    # columns the scoring tail needs, then MATERIALIZE the stage to scratch
-    # parquet (cfg.stage_materialize). Two reasons:
+    # columns the scoring tail needs, then MATERIALIZE the stage to
+    # parquet at _stage_uri. Two reasons:
     #   * driver latency: every downstream DataFrame op re-analyzes its
     #     whole logical subtree; cutting the tree at fm took the sf0.1
     #     plan-build from ~14 s to ~5 s. (localCheckpoint also cuts the
@@ -280,71 +310,30 @@ def build_graph(
     #     stage table a killed scoring run resumes from (lineage.TripleSink
     #     is the same seam); the sandbox backend is a scratch dir.
     fm = filter_pointless_full(mentions, cfg.symbol_len_limit, bcast_ok)  # F6+F7
-    fm = fm.select("url", "name", "kind", "start_byte")
-    scratch = None
-    master = spark.conf.get("spark.master", "")
-    if cfg.stage_materialize and cfg.stage_scratch_uri:
-        # shared scratch (s3://…, hdfs://…) — every executor and the
-        # driver see the same filesystem; cleanup is owned by the scratch
-        # location's lifecycle (TTL / snapshot expiry), not this process.
-        import uuid
-
-        fm_path = cfg.stage_scratch_uri.rstrip("/") + f"/fm_{uuid.uuid4().hex}"
-        fm.write.mode("overwrite").parquet(fm_path)
-        fm = spark.read.parquet(fm_path).cache()
-    elif cfg.stage_materialize and master.startswith("local"):
-        import atexit
-        import os
-        import shutil
-        import tempfile
-
-        scratch = tempfile.mkdtemp(prefix="gossiphs_stage_")
-        # the returned GraphTables read from these files for the life of
-        # the caller, so reclaim at process exit (review finding: without
-        # this every build leaked a corpus-scale parquet dir). In
-        # production the stage table is Iceberg via the TripleSink seam
-        # and snapshot expiry owns its lifecycle.
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        fm_path = os.path.join(scratch, "fm")
-        fm.write.mode("overwrite").parquet(fm_path)
-        fm = spark.read.parquet(fm_path).cache()
-    else:
-        if cfg.stage_materialize:
-            # non-local master with no shared scratch URI: a driver-local
-            # tempdir would be written by executors to THEIR disks and
-            # read back truncated — fall back to caching the stage.
-            import warnings
-
-            warnings.warn(
-                "stage_materialize skipped: spark.master is non-local and "
-                "cfg.stage_scratch_uri is unset; set a shared scratch URI "
-                "to materialize the stage on a cluster",
-                stacklevel=2,
-            )
-        fm = fm.cache()
+    fm.select("url", "name", "kind", "start_byte").write.parquet(fm_path)
+    fm = s.cache(s.spark.read.parquet(fm_path))
     defs = fm.filter(F.col("kind") == "DEF")
     refs = fm.filter(F.col("kind") == "REF")
     imports = fm.filter(F.col("kind") == "IMPORT")
 
     # ---- evidence prep (F8, A4, A12) — all small aggregates, broadcastable
-    ev_fill.result()  # dedup scan finished behind the stats/fm jobs
-    pool.shutdown(wait=False)
-    sizes = ev_base.groupBy("evidence_id").agg(
-        F.countDistinct("url").alias("n_urls")
-    )
-    limit = int(n_pages * cfg.commit_size_limit_ratio)
-    # the evidence-id dictionary grows with the corpus (snapshots ∝ crawl
-    # volume) just like the name dictionaries — same gate (bcast_ok is the
-    # one corpus-scale switch: past the threshold, every corpus-growing
-    # dictionary stays a shuffle join)
-    ev = ev_base.join(
-        _maybe_broadcast(
-            sizes.filter(F.col("n_urls") < limit).select("evidence_id"), bcast_ok
-        ),
-        "evidence_id", "left_semi",
-    ).cache()  # consumed by anchor, cardinality, pair-intersection, gate
-    anchor_row = ev.agg(F.max("ts").alias("mx")).collect()[0]
-    ev_base.unpersist()  # the filtered ev cache is materialized now
+    with scope(s.spark) as ev_scope:  # the dedup cache lives until ev fills
+        ev_base = ev_scope.cache(evidence.select("url", "evidence_id", "ts").distinct())
+        sizes = ev_base.groupBy("evidence_id").agg(
+            F.countDistinct("url").alias("n_urls")
+        )
+        limit = int(n_pages * cfg.commit_size_limit_ratio)
+        # the evidence-id dictionary grows with the corpus (snapshots ∝
+        # crawl volume) just like the name dictionaries — same gate
+        # (bcast_ok is the one corpus-scale switch: past the threshold,
+        # every corpus-growing dictionary stays a shuffle join)
+        ev = s.cache(ev_base.join(
+            _maybe_broadcast(
+                sizes.filter(F.col("n_urls") < limit).select("evidence_id"), bcast_ok
+            ),
+            "evidence_id", "left_semi",
+        ))  # consumed by anchor, cardinality, pair-intersection, gate
+        anchor_row = ev.agg(F.max("ts").alias("mx")).collect()[0]
     anchor = anchor_row["mx"]
     if cfg.temporal_decay and anchor is not None:
         age_days = (
@@ -353,7 +342,7 @@ def build_graph(
         decay_w = F.pow(F.lit(2.0), -age_days / F.lit(cfg.half_life_days))
     else:
         decay_w = F.lit(1.0)
-    evd = ev.select("url", "evidence_id", decay_w.alias("w")).cache()
+    evd = s.cache(ev.select("url", "evidence_id", decay_w.alias("w")))
     card = evd.groupBy("url").agg(F.sum("w").alias("card"))
 
     # ---- per-file gate (ref graph.rs:608-618) ------------------------------
@@ -377,7 +366,7 @@ def build_graph(
     # scoring joins — uncached, the candidate join + dedup window executes
     # twice (visible as two identical 5-col window exchanges in the plan)
     cands = _candidates(cand_defs, cand_refs, signal_pages, bcast_ok)
-    cands = _physical_evidence(cands, imports).cache()
+    cands = s.cache(_physical_evidence(cands, imports))
 
     # ---- co-occurrence restricted to candidate pairs (J5/A5) -------------
     pairs = cands.select("ref_url", "def_url").distinct()
@@ -448,13 +437,13 @@ def build_graph(
     w = Window.partitionBy(*grp).orderBy(
         F.desc("bucket"), F.asc("def_url"), F.asc("def_byte")
     )
-    kept = (
+    kept = s.cache(  # consumed by fallback anti-join, edges, incoming, outgoing
         attach_cutoffs(scored, grp, "bucket", ["def_url", "def_byte"], cfg.def_limit)
         .withColumn("rn", F.row_number().over(w))
         .filter((F.col("bucket") >= F.col("cutoff")) | (F.col("rn") == 1))
         .filter(F.col("rn") <= hard_cap)
         .drop("rn", "cutoff")
-    ).cache()  # consumed by fallback anti-join, edges, incoming, outgoing
+    )
 
     # ---- J7 unique-def fallback (weight-0 links, ref graph.rs:801-819) ---
     linked_defs = kept.select("def_url", "def_name").distinct()
@@ -479,9 +468,9 @@ def build_graph(
     # ---- A8: page-level edge accumulation (salted two-phase) -------------
     # cache: consumed by page_edges, incoming AND outgoing — without it the
     # kept-union-fallback chain re-executes once per consumer
-    sym_edges = kept.select(
+    sym_edges = s.cache(kept.select(
         "ref_url", "ref_name", "occ", "def_url", "def_name", "bucket"
-    ).unionByName(fallback).cache()
+    ).unionByName(fallback))
     page_edges = salted_sum(
         sym_edges.withColumn("w_total", F.col("bucket") * F.col("occ")),
         ["ref_url", "def_url"], "w_total", "ref_name",
@@ -558,7 +547,6 @@ def build_graph(
         related=related,
         triples=triples,
         damped=stoplist,
-        scratch_dir=scratch,
         cached=(mentions, fm, ev, evd, cands, kept, sym_edges),
     )
 
@@ -585,36 +573,37 @@ def canonicalize_triples(triples: DataFrame, jaccard_min: float = 0.6,
     evictable storage degrades to recompute instead of OOM at scale.
 
     Cache lifetimes (r7 ADVICE — a long-lived session must not
-    accumulate storage): the name dictionary is unpersisted HERE, the
+    accumulate storage): the name dictionary is released HERE, the
     moment the entity table's count() materializes it (nothing scans
     the dictionary after that). The ``triples`` and entity caches must
-    outlive the caller's final action on the returned plan, so they
-    cannot be released inside; pass ``cached_out`` (a list the two
-    DataFrames are appended to) and unpersist them after your action —
-    the contract queries do this via their detach step."""
+    outlive the caller's final action on the returned plan, so they are
+    handed off: pass ``cached_out`` (a list the two DataFrames are
+    appended to) and unpersist them after your action — the contract
+    queries register them on their scope. If the call fails, all three
+    caches are released before the error propagates."""
     from gossiphs_spark.operators.canonicalize import canonical_entities
 
-    triples = triples.cache()
-    names = (
-        triples.select(F.col("subj").alias("name"))
-        .union(triples.select(F.col("obj").alias("name")))
-        .distinct()
-        .cache()
-    )
-    ents = canonical_entities(
-        names,
-        n_perms=cfg.minhash_perms,
-        rows_per_band=max(cfg.minhash_perms // cfg.minhash_bands, 1),
-        jaccard_min=jaccard_min,
-        shingle_k=cfg.shingle_size,
-        cache_names=False,
-    ).cache()
-    hint = (
-        F.broadcast if ents.count() <= cfg.broadcast_threshold_rows else (lambda d: d)
-    )
-    names.unpersist()  # entity table is materialized; dictionary is done
+    with scope(triples.sparkSession) as s:
+        triples = s.cache(triples)
+        with scope(s.spark) as dictionary:
+            names = dictionary.cache(
+                triples.select(F.col("subj").alias("name"))
+                .union(triples.select(F.col("obj").alias("name")))
+                .distinct()
+            )
+            ents = s.cache(canonical_entities(
+                names,
+                n_perms=cfg.minhash_perms,
+                rows_per_band=max(cfg.minhash_perms // cfg.minhash_bands, 1),
+                jaccard_min=jaccard_min,
+                shingle_k=cfg.shingle_size,
+                cache_names=False,
+            ))
+            n_ents = ents.count()
+        s.pop_all()  # the returned plan reads both caches
     if cached_out is not None:
         cached_out.extend((triples, ents))
+    hint = F.broadcast if n_ents <= cfg.broadcast_threshold_rows else (lambda d: d)
     subj_map = ents.select(
         F.col("name").alias("subj"), F.col("canonical_name").alias("canon_subj")
     )

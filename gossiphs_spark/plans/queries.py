@@ -14,6 +14,8 @@ gossiphs_spark/plans/oracles.py. Conventions for oracle parity:
 
 from __future__ import annotations
 
+import uuid
+
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -25,6 +27,7 @@ from gossiphs_spark.operators import textmode as tm
 from gossiphs_spark.operators import scoring as sc
 from gossiphs_spark.operators.ranking import group_cutoffs
 from gossiphs_spark.operators.graphops import dense_ids, snapshot_diff
+from gossiphs_spark.session import scope
 from gossiphs_spark.sources.testdata import doc_pages, evidence, load_table
 
 N_DOCS_CACHE: dict[str, int] = {}
@@ -44,14 +47,9 @@ def _mentions(spark, sf_dir):
     return tm.mentions(doc_pages(spark, sf_dir))
 
 
-# Explain-capture hook: scripts/capture_plans.py sets this so _finish
-# returns the raw (un-checkpointed) plan — the judge-facing plan files
-# must show the real computation shape, not "Scan ExistingRDD".
-_EXPLAIN_CAPTURE = False
-
-
-def _cached_fm(spark, sf_dir):
-    """mentions → filter_pointless with both levels cached (guide §5).
+def _cached_fm(s, sf_dir):
+    """mentions → filter_pointless with both levels cached on the query's
+    scope (guide §5), released when the query's scope exits.
 
     Every composed text-mode query references the fm tree from several
     branches (defs, refs, the F7 name dictionaries, def_counts…) and
@@ -60,26 +58,9 @@ def _cached_fm(spark, sf_dir):
     and the posexplode+window extraction re-executes per branch (measured
     ~10 copies / 50-118 Exchange nodes per query plan at r9 start). One
     cached pass each for mentions and fm collapses that to a single
-    derivation. Callers MUST release via :func:`_finish` (or unpersist
-    directly) so no cache outlives its query — bench isolation."""
-    m = _mentions(spark, sf_dir).cache()
-    fm = tm.filter_pointless(m, 3).cache()
-    return m, fm
-
-
-def _finish(df, *caches):
-    """Eagerly materialize a query result INSIDE its timed region, then
-    release the caches it consumed. The caller's action then reads the
-    materialized partitions; nothing re-derives the released chain, and
-    no cache leaks across queries sharing the bench/driver session.
-    Results here are probe-bounded (small); corpus-scale outputs go
-    through the TripleSink/scratch seam instead."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    out = df.localCheckpoint(eager=True)
-    for c in caches:
-        c.unpersist()
-    return out
+    derivation."""
+    m = s.cache(_mentions(s.spark, sf_dir))
+    return s.cache(tm.filter_pointless(m, 3))
 
 
 def _filtered(spark, sf_dir):
@@ -319,26 +300,26 @@ def j2_link_basename(spark, sf_dir):
 
 
 def a8_edges(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    e = tm.edges(
-        fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
-    )
-    out = (
-        e.filter(_doc_num(F.col("src_url")) < 10)
-        .groupBy("src_url", "dst_url")
-        .agg(F.sum("weight").cast("long").alias("weight"))
-    )
-    return _finish(out, m, fm)
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        e = tm.edges(
+            fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
+        )
+        return s.result(
+            e.filter(_doc_num(F.col("src_url")) < 10)
+            .groupBy("src_url", "dst_url")
+            .agg(F.sum("weight").cast("long").alias("weight"))
+        )
 
 
 def a9_related_pages(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
-    out = rel.filter(_doc_num(F.col("page")) < 10).select(
-        "page", "other", F.col("score").cast("long").alias("score")
-    )
-    return _finish(out, m, fm)
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
+        return s.result(rel.filter(_doc_num(F.col("page")) < 10).select(
+            "page", "other", F.col("score").cast("long").alias("score")
+        ))
 
 
 def a9_related_with_symbols(spark, sf_dir):
@@ -369,17 +350,16 @@ def a9_related_with_symbols(spark, sf_dir):
 
 
 def w8_topk_neighbors(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(
-        tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
-    ).filter(_doc_num(F.col("page")) < 20)
-    out = tm.topk_neighbors(rel, 5)
-    out = out.select(
-        "page", "other", F.col("score").cast("long").alias("score"),
-        F.col("rnk").cast("long").alias("rnk"),
-    )
-    return _finish(out, m, fm)
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(
+            tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
+        ).filter(_doc_num(F.col("page")) < 20)
+        return s.result(tm.topk_neighbors(rel, 5).select(
+            "page", "other", F.col("score").cast("long").alias("score"),
+            F.col("rnk").cast("long").alias("rnk"),
+        ))
 
 
 def a9_symbol_neighbors(spark, sf_dir):
@@ -389,19 +369,19 @@ def a9_symbol_neighbors(spark, sf_dir):
     pages) and REF-direction (referencing page → defining pages) neighbor
     row. Anchor pages probe < 5 (the text-mode vocabulary is ~30 dense
     words, so an unprobed symbol slice is ~10^5 detail rows at sf0.01)."""
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    refs = fm.filter(F.col("kind") == "REF")
-    e = tm.edges(defs, refs)
-    # probe names via the per-name aggregate (tm.edge_names) instead of
-    # key-projecting the materialized edge join (~10^8 rows at sf0.1)
-    probe = tm.edge_names(defs, refs).orderBy("name").limit(3)
-    out = tm.symbol_neighbors_many(e, probe)
-    out = out.filter(_doc_num(F.col("anchor_url")) < 5).select(
-        "kind", "anchor_url", "neighbor_url", "name",
-        F.col("weight").cast("long").alias("weight"),
-    )
-    return _finish(out, m, fm)
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        refs = fm.filter(F.col("kind") == "REF")
+        e = tm.edges(defs, refs)
+        # probe names via the per-name aggregate (tm.edge_names) instead of
+        # key-projecting the materialized edge join (~10^8 rows at sf0.1)
+        probe = tm.edge_names(defs, refs).orderBy("name").limit(3)
+        out = tm.symbol_neighbors_many(e, probe)
+        return s.result(out.filter(_doc_num(F.col("anchor_url")) < 5).select(
+            "kind", "anchor_url", "neighbor_url", "name",
+            F.col("weight").cast("long").alias("weight"),
+        ))
 
 
 def eval_cutoff_search(spark, sf_dir):
@@ -419,11 +399,6 @@ def eval_cutoff_search(spark, sf_dir):
     exercised, not vacuous, in the oracle comparison."""
     from gossiphs_spark.evalx import cutoff_search
 
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    rel = tm.related_pages(
-        tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
-    ).filter(_doc_num(F.col("page")) < 400)
     pn = _doc_num(F.col("page"))
     on = _doc_num(F.col("other"))
     r = (pn * 7 + on * 13) % 10
@@ -432,14 +407,17 @@ def eval_cutoff_search(spark, sf_dir):
         .when(r < 7, F.lit("true_bonus"))
         .otherwise(F.lit("phantom"))
     )
-    links = rel.select(
-        F.col("page").alias("src"), F.col("other").alias("dst"),
-        "score", label.alias("label"),
-    )
-    out = cutoff_search(links)  # eager: detaches before returning
-    m.unpersist()
-    fm.unpersist()
-    return out
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        rel = tm.related_pages(
+            tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs
+        ).filter(_doc_num(F.col("page")) < 400)
+        links = rel.select(
+            F.col("page").alias("src"), F.col("other").alias("dst"),
+            "score", label.alias("label"),
+        )
+        return cutoff_search(links)  # materializes its result on the driver
 
 
 def o8_hub_damped_counts(spark, sf_dir):
@@ -563,28 +541,27 @@ def so1_snapshot_diff(spark, sf_dir):
 
 
 def s5_dense_export(spark, sf_dir):
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    # cache the probe-bounded related slice too: it feeds the url-universe
-    # union (2 scans) AND the final id-mapping join (guide §5)
-    rel = (
-        tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
-        .filter((_doc_num(F.col("page")) < 5) & (_doc_num(F.col("other")) < 5))
-        .cache()
-    )
-    urls = (
-        rel.select(F.col("page").alias("url"))
-        .union(rel.select(F.col("other").alias("url")))
-        .distinct()
-    )
-    # two-phase global rank (graphops.dense_ids) — no single-partition sort
-    nodes = dense_ids(urls)
-    src = nodes.select(F.col("url").alias("page"), F.col("id").alias("src"))
-    dst = nodes.select(F.col("url").alias("other"), F.col("id").alias("dst"))
-    out = rel.join(src, "page").join(dst, "other").select(
-        "src", "dst", F.col("score").cast("long").alias("score")
-    )
-    return _finish(out, m, fm, rel)
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        # cache the probe-bounded related slice too: it feeds the
+        # url-universe union (2 scans) AND the final id-mapping join (guide §5)
+        rel = s.cache(
+            tm.related_pages(tm.edges(defs, fm.filter(F.col("kind") == "REF")), defs)
+            .filter((_doc_num(F.col("page")) < 5) & (_doc_num(F.col("other")) < 5))
+        )
+        urls = (
+            rel.select(F.col("page").alias("url"))
+            .union(rel.select(F.col("other").alias("url")))
+            .distinct()
+        )
+        # two-phase global rank (graphops.dense_ids) — no single-partition sort
+        nodes = dense_ids(urls)
+        src = nodes.select(F.col("url").alias("page"), F.col("id").alias("src"))
+        dst = nodes.select(F.col("url").alias("other"), F.col("id").alias("dst"))
+        return s.result(rel.join(src, "page").join(dst, "other").select(
+            "src", "dst", F.col("score").cast("long").alias("score")
+        ))
 
 
 def s6_source_matrix(spark, sf_dir):
@@ -600,55 +577,55 @@ def s6_source_matrix(spark, sf_dir):
     value-buckets rows), and subtract the src==dst diagonal exactly.
     Identical result — the oracle still computes the naive pair grain, so
     the value-hash proves the factorization."""
-    m, fm = _cached_fm(spark, sf_dir)
-    defs = fm.filter(F.col("kind") == "DEF")
-    refs = fm.filter(F.col("kind") == "REF")
-    pages = doc_pages(spark, sf_dir).select("url", "source")
-    # the three per-side aggregates each feed two consumers (side dim +
-    # diagonal correction) — cache the (small) aggregates, not the joins
-    refcnt = refs.groupBy("url", "name").agg(F.count("*").alias("w")).cache()
-    dd = defs.select("url", "name").distinct().cache()
-    defcnt = defs.groupBy("url").agg(F.count("*").alias("d")).cache()
-    a_side = (
-        refcnt.join(pages, "url")
-        .groupBy("name", F.col("source").alias("source_a"), "w")
-        .agg(F.count("*").alias("na"))
-    )
-    b_side = (
-        dd.join(defcnt, "url").join(pages, "url")
-        .groupBy("name", F.col("source").alias("source_b"), "d")
-        .agg(F.count("*").alias("nb"))
-    )
-    out_w = F.col("w")
-    in_w = F.greatest(F.floor(F.col("w") / F.col("d")), F.lit(1))
-    cells = a_side.join(b_side, "name").select(
-        "source_a", "source_b",
-        (F.col("na") * F.col("nb") * out_w).alias("out_s"),
-        (F.col("na") * F.col("nb") * in_w).alias("in_s"),
-    )
-    # outgoing edges score cell (source(src), source(dst)); incoming score
-    # the transposed cell (page = dst)
-    m_out = cells.groupBy("source_a", "source_b").agg(F.sum("out_s").alias("s"))
-    m_in = cells.groupBy(
-        F.col("source_b").alias("source_a"), F.col("source_a").alias("source_b")
-    ).agg(F.sum("in_s").alias("s"))
-    # exact diagonal correction: the edge table excludes src == dst, so
-    # subtract the pages that both ref and define the same name
-    self_rows = (
-        refcnt.join(dd, ["url", "name"])
-        .join(defcnt, "url").join(pages, "url")
-        .select(
-            F.col("source").alias("source_a"), F.col("source").alias("source_b"),
-            (-(out_w + in_w)).alias("s"),
+    with scope(spark) as s:
+        fm = _cached_fm(s, sf_dir)
+        defs = fm.filter(F.col("kind") == "DEF")
+        refs = fm.filter(F.col("kind") == "REF")
+        pages = doc_pages(s.spark, sf_dir).select("url", "source")
+        # the three per-side aggregates each feed two consumers (side dim +
+        # diagonal correction) — cache the (small) aggregates, not the joins
+        refcnt = s.cache(refs.groupBy("url", "name").agg(F.count("*").alias("w")))
+        dd = s.cache(defs.select("url", "name").distinct())
+        defcnt = s.cache(defs.groupBy("url").agg(F.count("*").alias("d")))
+        a_side = (
+            refcnt.join(pages, "url")
+            .groupBy("name", F.col("source").alias("source_a"), "w")
+            .agg(F.count("*").alias("na"))
         )
-    )
-    out = (
-        m_out.unionByName(m_in).unionByName(self_rows)
-        .groupBy("source_a", "source_b")
-        .agg(F.sum("s").cast("long").alias("score"))
-        .filter(F.col("score") != 0)
-    )
-    return _finish(out, m, fm, refcnt, dd, defcnt)
+        b_side = (
+            dd.join(defcnt, "url").join(pages, "url")
+            .groupBy("name", F.col("source").alias("source_b"), "d")
+            .agg(F.count("*").alias("nb"))
+        )
+        out_w = F.col("w")
+        in_w = F.greatest(F.floor(F.col("w") / F.col("d")), F.lit(1))
+        cells = a_side.join(b_side, "name").select(
+            "source_a", "source_b",
+            (F.col("na") * F.col("nb") * out_w).alias("out_s"),
+            (F.col("na") * F.col("nb") * in_w).alias("in_s"),
+        )
+        # outgoing edges score cell (source(src), source(dst)); incoming score
+        # the transposed cell (page = dst)
+        m_out = cells.groupBy("source_a", "source_b").agg(F.sum("out_s").alias("s"))
+        m_in = cells.groupBy(
+            F.col("source_b").alias("source_a"), F.col("source_a").alias("source_b")
+        ).agg(F.sum("in_s").alias("s"))
+        # exact diagonal correction: the edge table excludes src == dst, so
+        # subtract the pages that both ref and define the same name
+        self_rows = (
+            refcnt.join(dd, ["url", "name"])
+            .join(defcnt, "url").join(pages, "url")
+            .select(
+                F.col("source").alias("source_a"), F.col("source").alias("source_b"),
+                (-(out_w + in_w)).alias("s"),
+            )
+        )
+        return s.result(
+            m_out.unionByName(m_in).unionByName(self_rows)
+            .groupBy("source_a", "source_b")
+            .agg(F.sum("s").cast("long").alias("score"))
+            .filter(F.col("score") != 0)
+        )
 
 
 # ------------------------------------------------- evidence-based scoring --
@@ -1170,46 +1147,6 @@ def ann_ivf_search(spark, sf_dir):
 
 # ---------------------------------------------------------------- rows-only
 # (no DuckDB oracle — the driver records the weaker rows-only check)
-def _detach(spark, df):
-    """Materialize a small result and release every intermediate cache —
-    the scored build caches its hot intermediates, and a sequence of
-    queries sharing one session would otherwise accumulate them until the
-    heap fills. Demo-sized outputs only (collects to the driver)."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    spark.catalog.clearCache()
-    return spark.createDataFrame(rows, schema)
-
-
-def _detach_cached(spark, df, cached):
-    """Scoped :func:`_detach`: materialize a small result, then unpersist
-    exactly the caches in ``cached`` (e.g. canonicalize_triples'
-    ``cached_out``) — other queries sharing the session keep theirs."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    for c in cached:
-        c.unpersist()
-    return spark.createDataFrame(rows, schema)
-
-
-def _detach_graph(spark, df, g):
-    """Scoped :func:`_detach`: materialize a small result, then release
-    exactly the caches (and the scratch stage) the given build created —
-    unlike ``clearCache()`` this leaves every OTHER query's warmed cache
-    in place when many contract queries share one session (bench/driver)."""
-    if _EXPLAIN_CAPTURE:
-        return df
-    rows = df.collect()
-    schema = df.schema
-    g.release_caches()
-    g.release()
-    return spark.createDataFrame(rows, schema)
-
-
 def mm_image_dims(spark, sf_dir):
     """Multimodal REAL decode path, oracle-verified: valid PNG (even
     doc_id) / GIF (odd) container headers are byte-assembled from doc_id,
@@ -2168,30 +2105,29 @@ def kg_delta_related(spark, sf_dir):
     over the POST-delta corpus — a hash mismatch anywhere in the splice
     (stats update, affected-page closure, edge prefilter) flips it."""
     from gossiphs_spark.operators.incremental import apply_delta, name_stats
-    from gossiphs_spark.session import fixture_partitions
 
     g = (F.col("id") / 10).cast("long")
     mk = lambda suf: F.concat(F.lit("ent"), g.cast("string"), F.lit(suf))  # noqa: E731
-    pages = spark.range(300).select(
-        F.concat(F.lit("doc://"), F.col("id").cast("string")).alias("url"),
-        F.concat_ws(
-            " ", mk("_alpha"), mk("_beta"), mk("_alpha"), mk("_gamma"),
-            F.concat(F.lit("page"), F.col("id").cast("string"), F.lit("_title")),
-        ).alias("content"),
-        F.lit("s").alias("source"),
-    )
     # cache the "materialized state tables" the splice reads — in
     # production these come from the state store, not a recomputed plan;
     # uncached, apply_delta's ~10 references each re-derived the full
     # mention/related pipeline (1674-Exchange plan at r9 start)
-    with fixture_partitions(spark, 300):
-        m1 = tm.mentions(pages).cache()
-        fp = tm.filter_pointless(m1, 3).cache()
-        rel1 = tm.related_pages(
+    with scope(spark, rows=300) as s:
+        pages = s.spark.range(300).select(
+            F.concat(F.lit("doc://"), F.col("id").cast("string")).alias("url"),
+            F.concat_ws(
+                " ", mk("_alpha"), mk("_beta"), mk("_alpha"), mk("_gamma"),
+                F.concat(F.lit("page"), F.col("id").cast("string"), F.lit("_title")),
+            ).alias("content"),
+            F.lit("s").alias("source"),
+        )
+        m1 = s.cache(tm.mentions(pages))
+        fp = s.cache(tm.filter_pointless(m1, 3))
+        rel1 = s.cache(tm.related_pages(
             tm.edges(fp.filter(F.col("kind") == "DEF"),
                      fp.filter(F.col("kind") == "REF")),
             fp.filter(F.col("kind") == "DEF"),
-        ).cache()
+        ))
         # delta: 5 pages of island 0 now also mention island 1's names
         changed = pages.filter(_doc_num(F.col("url")) < 5).select(
             "url",
@@ -2204,7 +2140,7 @@ def kg_delta_related(spark, sf_dir):
         _, _, related_new, affected, _ = apply_delta(
             m1, name_stats(m1), rel1, changed, return_touched=True
         )
-        return _finish(related_new, m1, fp, rel1)
+        return s.result(related_new)
 
 
 def kg_build_related(spark, sf_dir):
@@ -2214,12 +2150,12 @@ def kg_build_related(spark, sf_dir):
     from gossiphs_spark.config import PipelineConfig
     from gossiphs_spark.datagen import pages_df
     from gossiphs_spark.plans.pipeline import build_graph
-    from gossiphs_spark.session import fixture_partitions
 
-    with fixture_partitions(spark, 200):
-        pages, evidence, _ = pages_df(spark, n_pages=200, seed=7)
-        g = build_graph(spark, pages, evidence, PipelineConfig())
-        return _detach_graph(spark, g.related, g)
+    with scope(spark, rows=200) as s:
+        pages, evidence, _ = pages_df(s.spark, n_pages=200, seed=7)
+        g = build_graph(s.spark, pages, evidence, PipelineConfig())
+        s.callback(g.release)
+        return s.result(g.related)
 
 
 def kg_build_scored(spark, sf_dir):
@@ -2254,7 +2190,6 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
     def_limit=3 binds both the knee head and the hard cap."""
     from gossiphs_spark.config import PipelineConfig
     from gossiphs_spark.plans.pipeline import build_graph
-    from gossiphs_spark.session import fixture_partitions
 
     n_all = n_reg + n_solo
     i = F.col("id")
@@ -2297,7 +2232,8 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
         F.lit("<html><head><title>"), title, F.lit("</title></head><body><p>"),
         body, solo_ref, F.lit("</p>"), anchor, F.lit("</body></html>"),
     )
-    r = spark.range(n_all)
+    fx = scope(spark, rows=n_all)  # `s` is the string cast here
+    r = fx.spark.range(n_all)
     pages = r.select(url_of(i).alias("url"), F.encode(html, "utf-8").alias("html"))
 
     base_ep = 1704067200  # 2024-01-01T00:00:00Z
@@ -2312,33 +2248,41 @@ def _kg_build_scored_impl(spark, n_reg: int, n_solo: int):
     )
     evidence = ev_of(i % 6).unionByName(ev_of((i % 6 + 1) % 6)).unionByName(fat)
 
-    with fixture_partitions(spark, n_all):
+    with fx:
         g = build_graph(
-            spark, pages, evidence,
+            fx.spark, pages, evidence,
             PipelineConfig(max_def_ratio=0.15, def_limit=3),
         )
-        return _detach_graph(
-            spark,
-            g.related.select(
-                "page", "other", F.col("score").cast("long").alias("score")
-            ),
-            g,
-        )
+        fx.callback(g.release)
+        return fx.result(g.related.select(
+            "page", "other", F.col("score").cast("long").alias("score")
+        ))
+
+
+def _canonicalize_in(s, triples):
+    """canonicalize_triples with its handed-off caches registered on the
+    query's scope ``s``."""
+    from gossiphs_spark.plans.pipeline import canonicalize_triples
+
+    cached: list = []
+    out = canonicalize_triples(triples, cached_out=cached)
+    for df in cached:
+        s.callback(df.unpersist)
+    return out
 
 
 def kg_triples_canonical(spark, sf_dir):
     """Extraction triples + MinHash-LSH entity canonicalization (U4)."""
     from gossiphs_spark.datagen import pages_df
     from gossiphs_spark.operators.extract import extract_mentions
-    from gossiphs_spark.plans.pipeline import canonicalize_triples
-    from gossiphs_spark.session import fixture_partitions
 
-    with fixture_partitions(spark, 120):
-        pages, _, _ = pages_df(spark, n_pages=120, seed=7)
-        m = extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
+    with scope(spark, rows=120) as s:
+        pages, _, _ = pages_df(s.spark, n_pages=120, seed=7)
         # one kernel pass: the titles/objs branches below would each re-run
         # the extraction mapInPandas (same fix as lineage.materialize_triples)
-        m = m.localCheckpoint(eager=True)
+        m = s.cache(
+            extract_mentions(pages, columns=("url", "name", "kind", "start_byte"))
+        )
         titles = m.filter(F.col("kind") == "DEF").select(
             "url", F.col("name").alias("subj"))
         objs = (
@@ -2352,9 +2296,7 @@ def kg_triples_canonical(spark, sf_dir):
             objs.join(titles, "url").filter(F.col("obj") != F.col("subj"))
             .select("subj", "pred", "obj", "url", "start_byte")
         )
-        cached: list = []
-        return _detach_cached(
-            spark, canonicalize_triples(triples, cached_out=cached), cached)
+        return s.result(_canonicalize_in(s, triples))
 
 
 def kg_pagerank(spark, sf_dir):
@@ -2366,34 +2308,40 @@ def kg_pagerank(spark, sf_dir):
     value-verified (like u4_canonical_components)."""
     from gossiphs_spark.operators.graphops import pagerank
 
-    m, fm = _cached_fm(spark, sf_dir)
-    e = tm.edges(
-        fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
-    )
-    # deterministic subgraph bound (same pattern as a8/a9/w4 probes): the
-    # text-mode corpus is link-dense, so the full edge set is ~quadratic
-    # in pages; both endpoint predicates push below the linking join into
-    # the def/ref scans. 300 < the sf0.01 corpus, so the bound is
-    # exercised, not vacuous, in the oracle comparison.
-    e = e.filter(
-        (_doc_num(F.col("src_url")) < 300) & (_doc_num(F.col("dst_url")) < 300)
-    )
-    # cache the (bounded, ≤300² row) aggregated subgraph: pagerank reads
-    # its edge input four times (endpoints ×2, out-weights, share join)
-    agg = e.groupBy("src_url", "dst_url").agg(F.sum("weight").alias("w")).cache()
-    agg.count()  # fill at corpus parallelism (the linking join is big)…
-    from gossiphs_spark.session import fixture_partitions
-
-    # …then iterate at subgraph parallelism: the 3 rank iterations run
-    # ~10 shuffle stages over a ≤300-node graph (scale-adaptive clamp)
-    with fixture_partitions(spark, 300):
+    with scope(spark) as s, scope(spark, rows=300) as small:
+        fm = _cached_fm(s, sf_dir)
+        e = tm.edges(
+            fm.filter(F.col("kind") == "DEF"), fm.filter(F.col("kind") == "REF")
+        )
+        # deterministic subgraph bound (same pattern as a8/a9/w4 probes): the
+        # text-mode corpus is link-dense, so the full edge set is ~quadratic
+        # in pages; both endpoint predicates push below the linking join into
+        # the def/ref scans. 300 < the sf0.01 corpus, so the bound is
+        # exercised, not vacuous, in the oracle comparison.
+        e = e.filter(
+            (_doc_num(F.col("src_url")) < 300) & (_doc_num(F.col("dst_url")) < 300)
+        )
+        # the aggregated subgraph (≤300² rows) is computed once at corpus
+        # parallelism (the linking join is big) and cached: pagerank reads
+        # it four times (endpoints ×2, out-weights, share join). A global
+        # temp view hands the cached plan to the clamped session, where
+        # the 3 rank iterations run ~10 shuffle stages over a ≤300-node
+        # graph. Collecting it into the clone instead (small.result)
+        # measured ~27% slower: every scan re-ships the 88k-row local
+        # relation at sf0.01.
+        agg = s.cache(e.groupBy("src_url", "dst_url").agg(F.sum("weight").alias("w")))
+        agg.count()
+        view = f"kg_pagerank_{uuid.uuid4().hex}"
+        agg.createGlobalTempView(view)
+        small.callback(spark.catalog.dropGlobalTempView, view)
+        agg = small.spark.table(
+            f"{spark.conf.get('spark.sql.globalTempDatabase')}.{view}"
+        )
         pr = pagerank(agg, src="src_url", dst="dst_url", weight="w",
-                      iters=3, damping=0.85)  # detaches internally
-    for c in (m, fm, agg):
-        c.unpersist()
-    return pr.select(
-        F.col("node").alias("page"), F.round("rank", 6).alias("pagerank")
-    )
+                      iters=3, damping=0.85)  # materializes internally
+        return pr.select(
+            F.col("node").alias("page"), F.round("rank", 6).alias("pagerank")
+        )
 
 
 def u4_canonical_components(spark, sf_dir):
@@ -2435,12 +2383,11 @@ def u4_triples_canonical(spark, sf_dir):
     suffix-variant construction (entity{k}, +s, +es → real 3-clusters),
     so surface forms genuinely collapse and the re-aggregation merges
     rows (non-vacuous in both engines by construction)."""
-    from gossiphs_spark.plans.pipeline import canonicalize_triples
-
     i = F.col("id")
     s = lambda c: c.cast("string")  # noqa: E731
     k = s(i % 12)
-    pages = spark.range(120).select(
+    fx = scope(spark, rows=120)  # `s` is the string cast here
+    pages = fx.spark.range(120).select(
         F.concat(F.lit("doc://"), s(i)).alias("url"),
         F.concat_ws(
             " ",
@@ -2452,20 +2399,12 @@ def u4_triples_canonical(spark, sf_dir):
         ).alias("content"),
         F.lit("s").alias("source"),
     )
-    from gossiphs_spark.session import fixture_partitions
-
-    with fixture_partitions(spark, 120):
-        triples = tm.triples(tm.mentions(pages), 3)
-        cached: list = []
-        out = canonicalize_triples(triples, cached_out=cached)
-        return _detach_cached(
-            spark,
-            out.select(
-                "subj", "pred", "obj", "url",
-                F.col("start_byte").cast("long").alias("start_byte"),
-            ),
-            cached,
-        )
+    with fx:
+        out = _canonicalize_in(fx, tm.triples(tm.mentions(pages), 3))
+        return fx.result(out.select(
+            "subj", "pred", "obj", "url",
+            F.col("start_byte").cast("long").alias("start_byte"),
+        ))
 
 
 def ann_lsh_buckets(spark, sf_dir):

@@ -11,8 +11,9 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import ExitStack
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _package_zip() -> str:
@@ -70,30 +71,64 @@ def tune_adaptive(spark: SparkSession, approx_input_bytes: int,
     return on
 
 
-from contextlib import contextmanager
+# Explain-capture hook: scripts/capture_plans.py sets this so Scope.result
+# returns the raw (un-materialized) plan — the plan files must show the
+# real computation shape, not a LocalTableScan of the collected rows.
+_EXPLAIN_CAPTURE = False
 
 
-@contextmanager
-def fixture_partitions(spark: SparkSession, n_rows: int,
-                       rows_per_part: int = 100):
-    """Clamp shuffle parallelism to a known-small input's size for the
-    duration of a fixture-scale job (guide §2: derive partitioning from
-    input size rather than a constant tuned to the session). A fixed
-    few-hundred-row synthetic corpus gains nothing from the session's
-    16-32 reducers per stage — each of its ~30 shuffle stages would just
-    launch mostly-empty tasks (measured ~2x on the composed fixture
-    queries at r9). Scale-safe by construction: the clamp never RAISES
-    the session value (min with the current setting), so corpus-scale
-    sessions keep their parallelism and only fixture-bounded work drops
-    to size-proportional task counts. Restores the prior setting on
-    exit; all of the job's actions must run inside the block."""
-    cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n = max(2, min(cur, n_rows // rows_per_part))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", str(cur))
+class Scope(ExitStack):
+    """The lifetime of one query or build: everything registered here is
+    released when the ``with`` block exits, on success and on failure.
+
+    ``spark`` is the session to build the job's DataFrames from (a child
+    session when :func:`scope` clamps parallelism). ``cache`` caches a
+    DataFrame and registers its release; ``result`` materializes a small
+    result on the driver so nothing it read has to outlive the scope;
+    ``pop_all`` (from ExitStack) hands the registered resources to a
+    caller whose tables must outlive the call."""
+
+    def __init__(self, spark: SparkSession | None = None):
+        super().__init__()
+        self.spark = spark
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        df = df.cache()
+        self.callback(df.unpersist)
+        return df
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Collect a small result and rebuild it JVM-side as a local
+        relation in ``self.spark``: unlike a checkpoint it pins no
+        persistent RDD for as long as the caller holds it, and the rows
+        never round-trip through Python objects."""
+        if _EXPLAIN_CAPTURE:
+            df._jdf.queryExecution().executedPlan()  # plan before caches go
+            return df
+        jdf = self.spark._jsparkSession.createDataFrame(
+            df._jdf.collectAsList(), df._jdf.schema()
+        )
+        return DataFrame(jdf, self.spark)
+
+
+def scope(spark: SparkSession, rows: int | None = None) -> Scope:
+    """Open a :class:`Scope` over ``spark``.
+
+    With ``rows`` (a known-small input size), ``scope.spark`` is a clone
+    of the session whose shuffle parallelism is derived from that size —
+    ``max(2, min(current, rows // 100))``: a few-hundred-row fixture
+    gains nothing from the session's 16-32 reducers per stage (~2x on the
+    composed fixture queries at r9), and the clamp never RAISES the
+    session value. The clone has its own SQLConf (so no other thread sees
+    the clamp) and shares the SparkContext and the CacheManager; only
+    DataFrames built from ``scope.spark`` plan with it. A clone, not
+    ``newSession()``: a new session starts from the default conf and
+    would drop runtime settings such as tune_adaptive's AQE switch."""
+    if rows is not None:
+        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        spark = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(2, min(cur, rows // 100))))
+    return Scope(spark)
 
 
 def dir_size_bytes(path: str) -> int:

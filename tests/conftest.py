@@ -16,8 +16,12 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 @pytest.fixture(scope="session")
 def spark():
     # one heap serves driver+executors in local mode and the full suite
-    # runs ~2500 stages through it — give it headroom beyond the 8g default
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
+    # runs ~2500 stages through it — give it headroom beyond the 8g default,
+    # but at most half the host's RAM: the JVM grows its heap toward -Xmx
+    # over a long suite, and a heap larger than the host leaves it to be
+    # killed by the kernel's OOM killer partway through (a 15 GiB host)
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", f"{min(16, max(4, ram_gib // 2))}g")
     s = get_spark(app_name="gossiphs_spark_tests", cores=8, shuffle_partitions=8)
     yield s
 

@@ -238,25 +238,27 @@ def test_outlink_same_host_cap_bounds_hub_fanout(spark):
     assert all(r["match_kind"] == "same_host" for r in got)
 
 
-def test_fixture_partitions_clamps_and_restores(spark):
-    """fixture_partitions derives parallelism from the fixture size,
-    never raises the session value, floors at 2, and restores on exit
-    (including via early return/exception)."""
-    from gossiphs_spark.session import fixture_partitions
+def test_scope_clamps_partitions_on_a_clone(spark):
+    """scope(spark, rows=n) derives parallelism from the fixture size on a
+    cloned session: never raises the session value, floors at 2, and
+    leaves the caller's session untouched (including via exception)."""
+    from gossiphs_spark.session import scope
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with fixture_partitions(spark, 500, rows_per_part=100) as n:
-        assert n == min(int(before), 5) if int(before) >= 2 else 2
-        assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+
+    def clamped(rows):
+        with scope(spark, rows=rows) as s:
+            assert spark.conf.get(key) == before
+            return int(s.spark.conf.get(key))
+
+    assert clamped(500) == max(2, min(int(before), 5))
     # tiny fixture floors at 2; huge fixture never exceeds the session
-    with fixture_partitions(spark, 10) as n:
-        assert n == 2
-    with fixture_partitions(spark, 10**9) as n:
-        assert n == int(before)
+    assert clamped(10) == 2
+    assert clamped(10**9) == int(before)
     try:
-        with fixture_partitions(spark, 10):
+        with scope(spark, rows=10):
             raise RuntimeError("boom")
     except RuntimeError:
         pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert spark.conf.get(key) == before

@@ -41,12 +41,17 @@ def test_hot_paths_whole_stage_codegen(spark):
     """The text-mode linking join plan must contain WholeStageCodegen
     spans (JVM-side expressions, no Python in the hot path). AQE wraps
     the plan unfinalized, hiding codegen markers — inspect the static
-    physical plan."""
+    physical plan. The query collects its result, so lint the computation
+    plan through the capture hook, not the LocalTableScan of its rows."""
+    from gossiphs_spark import session
+
     prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    session._EXPLAIN_CAPTURE = True
     try:
         plan = plan_of(Q.a8_edges(spark, SF_DIR))
     finally:
+        session._EXPLAIN_CAPTURE = False
         spark.conf.set("spark.sql.adaptive.enabled", prev)
     # '*(n)' operator prefixes mark whole-stage-codegen spans
     import re
@@ -127,13 +132,15 @@ def test_idf_map_broadcasts(spark):
     """j1_candidate_counts joins the per-name def-count dim — it must be a
     broadcast join (the corpus-sized pair join it replaced was the r1
     50s → 3s rewrite)."""
-    # the query detaches its result (localCheckpoint) — lint the real
-    # computation plan via the capture hook, not "Scan ExistingRDD"
-    Q._EXPLAIN_CAPTURE = True
+    # lint the real computation plan via the capture hook, not the
+    # collected result rows
+    from gossiphs_spark import session
+
+    session._EXPLAIN_CAPTURE = True
     try:
         plan = plan_of(Q.j1_candidate_counts(spark, SF_DIR))
     finally:
-        Q._EXPLAIN_CAPTURE = False
+        session._EXPLAIN_CAPTURE = False
     assert "BroadcastHashJoin" in plan
 
 
